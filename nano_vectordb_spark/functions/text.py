@@ -18,10 +18,8 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 ColumnOrName = Column | str
 
@@ -168,32 +166,6 @@ PROFILE_SCHEMA = (
 _PROFILE_COLS = [f.split(" ")[0] for f in PROFILE_SCHEMA.split(", ")]
 
 
-def _profile_batch(texts: pd.Series) -> pd.DataFrame:
-    look = _PROFILE_LOOKUP
-    rows = []
-    for text in texts:
-        if text is None:
-            rows.append((0, 0, 0, 0, 0, 0, 0, 0))
-            continue
-        parts = text.split(" ")
-        c = Counter(parts)
-        n = len(parts) - c.get("", 0)
-        sw = en = de = es = fr = 0
-        for w, (s_, e_, d_, x_, f_) in look.items():
-            k = c.get(w)
-            if k:
-                sw += s_ * k
-                en += e_ * k
-                de += d_ * k
-                es += x_ * k
-                fr += f_ * k
-        low = text.lower()
-        rows.append(
-            (n, sw, en, de, es, fr, len(low), len(low.translate(_PUNCT_DELETE_TABLE)))
-        )
-    return pd.DataFrame(rows, columns=_PROFILE_COLS)
-
-
 _VOCAB_FLAGS = None  # lazy (vocab_u64 sorted, order, flags matrix)
 
 
@@ -224,13 +196,13 @@ def _vocab_tables():
 
 
 def _profile_arrow(texts):
-    """Columnar twin of _profile_batch (r12 VERDICT item 6): the same
-    8 integer counts computed straight off the Arrow string buffers —
-    no per-row Python string objects, no Counter. ASCII rows (the
-    overwhelming case) run fully vectorized on the UTF-8 byte buffer;
-    non-ASCII rows fall back to the reference row logic verbatim, so
-    output equality with _profile_batch is structural, and is pinned
-    on the adversarial fixture in tests/test_text_fast.py."""
+    """The 8 integer profile counts computed straight off the Arrow
+    string buffers — no per-row Python string objects, no Counter. ASCII rows (the overwhelming case) run fully
+    vectorized on the UTF-8 byte buffer; non-ASCII rows fall back to
+    the row logic at the end of this function. Parity with the
+    expression path is pinned on adversarial fixtures (Unicode
+    special-casing, nulls, empty rows at every batch position) in
+    tests/test_text_fast.py."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -275,14 +247,14 @@ def _profile_arrow(texts):
         def row_sums(mask):
             # per-row sums of a per-byte 0/1 mask WITHOUT a global
             # cumsum (np.cumsum over bool/int8 measured pathologically
-            # slow — ~100 ns/elem); np.add.reduceat is ~50x faster,
-            # with explicit fix-ups for its empty-segment semantics
-            # (an empty segment yields vals[idx] instead of 0)
-            vals = mask.astype(np.int32)
-            if len(vals) == 0:
-                return np.zeros(n, dtype=np.int64)
-            idx = np.minimum(o[:-1], len(vals) - 1)
-            res = np.add.reduceat(vals, idx).astype(np.int64)
+            # slow — ~100 ns/elem); np.add.reduceat is ~50x faster.
+            # The zero sentinel makes every row start (up to len(mask),
+            # where trailing empty rows start) a valid index, so each
+            # non-empty row's segment ends exactly at the next start;
+            # an empty segment yields vals[idx] instead of 0, hence the
+            # fix-up.
+            vals = np.append(mask.astype(np.int32), 0)
+            res = np.add.reduceat(vals, o[:-1]).astype(np.int64)
             res[~nonempty] = 0
             return res
 
@@ -325,16 +297,15 @@ def _profile_arrow(texts):
         for name in ("sw", "en", "de", "es", "fr"):
             cols[f"{name}_hits"] = np.where(fast, cols[f"{name}_hits"], 0)
 
-        # non-ASCII rows: the reference row logic verbatim
+        # non-ASCII rows: the row logic — split on ' ', count exact
+        # word matches, lower() for the char counts
         slow = np.nonzero(valid & ~is_ascii)[0]
         if len(slow):
             look = _PROFILE_LOOKUP
             for i in slow:
                 text = texts[int(i)].as_py()
                 parts = text.split(" ")
-                from collections import Counter as _Counter
-
-                c = _Counter(parts)
+                c = Counter(parts)
                 nt = len(parts) - c.get("", 0)
                 sw = en = de = es = fr = 0
                 for w, (s_, e_, d_, x_, f_) in look.items():
@@ -367,26 +338,15 @@ def token_profile_udf():
     scored-then-filtered plan carries TWO ArrowEvalPython nodes and
     pays the profile pass twice (plan-pinned in tests/test_text_fast.py).
 
-    r13: the default implementation is the COLUMNAR arrow_udf
-    (_profile_arrow — Spark 4.1's Arrow-native scalar UDF), which
-    works straight off the Arrow string buffers and skips the
-    per-row Python string materialization the pandas path paid (the
-    r12-measured residual of the 2M-doc profile pass). _profile_batch
-    stays as the parity reference; equality is pinned on adversarial
-    fixtures (Unicode special-casing, nulls, batch splits) in
-    tests/test_text_fast.py. Set TOKEN_PROFILE_IMPL="pandas" to force
-    the reference path."""
-    if TOKEN_PROFILE_IMPL == "pandas":
-        return pandas_udf(_profile_batch, PROFILE_SCHEMA).asNondeterministic()
+    The implementation is the COLUMNAR arrow_udf (_profile_arrow —
+    Spark 4.1's Arrow-native scalar UDF), which works straight off the
+    Arrow string buffers with no per-row Python string materialization
+    for ASCII rows. Parity with the expression path is pinned on
+    adversarial fixtures (Unicode special-casing, nulls, empty rows,
+    batch splits) in tests/test_text_fast.py."""
     from pyspark.sql.functions import arrow_udf
 
     return arrow_udf(_profile_arrow, PROFILE_SCHEMA).asNondeterministic()
-
-
-# "arrow" (default) = _profile_arrow columnar path; "pandas" = the
-# _profile_batch reference (the r12 implementation, kept for parity
-# pinning and as the escape hatch).
-TOKEN_PROFILE_IMPL = "arrow"
 
 
 def scored_docs(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from nano_vectordb_spark.functions.text import token_hash_expr, tokens_expr
 from nano_vectordb_spark.functions.vector import dot_expr
+from nano_vectordb_spark.session import persist, release_caches  # noqa: F401
 
 MINHASH_P = 2_147_483_647
 
@@ -45,32 +46,13 @@ MINHASH_P = 2_147_483_647
 _VOCAB_MEMO_CAP = 4_000_000
 
 
-# Every persist this module takes is tracked here so long-lived
-# sessions (bench loops, the driver gate, notebooks) can free the
-# cached blocks deterministically — a bare .persist() with no release
-# path leaks executor storage for the session's lifetime.  Entry-level
-# memoization (registry._INDEX_CACHE) keeps re-invocations from
-# re-persisting; release_caches() is the explicit drain.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _PERSISTED.append(out)
-    return out
-
-
-def release_caches() -> int:
-    """Unpersist every DataFrame this module has cached; returns how
-    many were released."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        try:
-            df.unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    _PERSISTED.clear()
-    return n
+# Every persist this module takes goes through the session store
+# (session.persist) so long-lived sessions (bench loops, correctness
+# gates, notebooks) can free the cached blocks deterministically — a
+# bare .persist() with no release path leaks executor storage for the
+# session's lifetime. Entry-level memoization (session.memo) keeps
+# re-invocations from re-persisting; release_caches() is the explicit
+# drain.
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -218,7 +200,7 @@ def ngram_jaccard_pairs(
     # of the posting self-join below — unpersisted, the tokenize +
     # shingle pass ran twice per action. Doc-level rows (one per doc),
     # released via release_caches() like every dedup persist.
-    sized = _persist(
+    sized = persist(
         sh.select("doc_id", "shingles", F.size("shingles").alias("n_sh"))
     )
     ex = sized.select("doc_id", "n_sh", F.explode("shingles").alias("shingle"))
@@ -553,8 +535,10 @@ LIGHT_CANDIDATES_PER_DOC = 2.0
 # payload of the verify equi-joins dominates (measured 5M: ~23 s of
 # the 27 s warm LSH stage) and the 8 B/element hash prefilter pays.
 # The gate reads the SAME estimate the auto dispatch already computed,
-# so it adds no eager work; both verify forms are output-identical
-# (the prefilter is provably a superset filter), pinned in tests.
+# so it adds no eager work. Both verify forms are output-identical as
+# long as xxhash64 is injective on each document's shingle set (see
+# the comment above use_prefilter: the per-pair risk is about
+# n_sh^2 * 2^-64); the tests pin the identity on the fixtures.
 VERIFY_HASH_PREFILTER_MIN_CANDIDATES = 20_000
 
 
@@ -696,12 +680,12 @@ def minhash_lsh_pairs(
     # persisted so the estimate, the candidate stage, and benchmark
     # reps share one pass). The wide shingles never ride the sig path
     # and the sig never rides the verify path.
-    S = _persist(
+    S = persist(
         ngram_shingles(
             _spread_for_shingles(df, text_col), n, text_col, id_col
         ).withColumn("n_sh", F.size("shingles"))
     )
-    base = _persist(_minhash_sig_frame(S, k))
+    base = persist(_minhash_sig_frame(S, k))
     if plan not in ("auto", "kernel", "join"):
         raise ValueError(f"unknown plan {plan!r}")
     est = n_docs = None
@@ -718,7 +702,7 @@ def minhash_lsh_pairs(
     # candidate pairs feed both the id-prune and the verify join:
     # persist the (small, deduplicated) pair set so the candidate
     # stage runs once
-    cand = _persist(gen(base, bands, rows))
+    cand = persist(gen(base, bands, rows))
     # exact-Jaccard verify over the candidate docs' shingle sets: prune
     # the (persisted) base to candidate ids with a broadcast semi join
     # — candidate ids are ~2 x pair count, tiny next to the corpus —
@@ -735,14 +719,19 @@ def minhash_lsh_pairs(
     # (xxhash64, ~8 B/element) instead of the shingle strings
     # (~25 B/element) — the verify payload was the dominant warm term
     # of the 5M corpus_clean run (~0.4 GB of candidate shingle
-    # strings). PROVABLY lossless two-stage form: per-pair
-    # |hash-set intersect| >= |string-set intersect| (hashing can only
-    # merge distinct strings), so hash-Jaccard >= string-Jaccard and
-    # filtering on it keeps a superset of every qualifying pair; the
-    # exact STRING verify then decides on survivors only
-    # (~output-sized). No collision assumption is needed for
-    # correctness — a collision only costs one extra exact check.
-    # Below the threshold (fixture scale) the single-stage exact
+    # strings). Two-stage form: the hash-Jaccard filter keeps every
+    # qualifying pair iff per pair |hash-set intersect| >=
+    # |string-set intersect|, and the exact STRING verify then decides
+    # on survivors only (~output-sized). That inequality holds when
+    # xxhash64 is injective on each document's shingle set. A
+    # collision between a shingle only A holds and one only B holds
+    # just raises the hash intersection (one extra exact check); but
+    # array_intersect deduplicates, so two SHARED shingles that collide
+    # count once while na/nb stay string counts — the hash-Jaccard
+    # falls below the string Jaccard and a pair at the threshold can
+    # be pruned. The risk per candidate pair is about n_sh^2 * 2^-64
+    # (any two of a document's n_sh shingles colliding): ~5e-14 at
+    # n_sh = 1000. Below the threshold (fixture scale) the single-stage exact
     # verify is cheaper — the extra join layer is pure overhead when
     # the payload fits a broadcast; the estimate is already computed
     # for the auto dispatch, so the gate adds no action.
@@ -945,7 +934,7 @@ def minhash_estimator_error(
     pass, band join, candidate-keyed verification) plus a single-row
     final aggregate."""
     rows = k // bands
-    base = _persist(_shingles_and_sig(_spread(df), k, n, text_col, id_col))
+    base = persist(_shingles_and_sig(_spread(df), k, n, text_col, id_col))
     banded = _banded_sigs(base.select("doc_id", "sig"), bands, rows)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -1039,8 +1028,8 @@ def minhash_lsh_incremental(
     # batch, and in production the corpus band table is precomputed and
     # persisted alongside the corpus (already wide at scale) — adding a
     # corpus repartition per ingest would contradict that cost model.
-    c_base = _persist(_shingles_and_sig(corpus, k, n, text_col, id_col))
-    b_base = _persist(_shingles_and_sig(_spread(batch), k, n, text_col, id_col))
+    c_base = persist(_shingles_and_sig(corpus, k, n, text_col, id_col))
+    b_base = persist(_shingles_and_sig(_spread(batch), k, n, text_col, id_col))
     c_bands = _banded_sigs(c_base.select("doc_id", "sig"), bands, rows)
     b_bands = _banded_sigs(b_base.select("doc_id", "sig"), bands, rows)
     cand = (
@@ -2142,7 +2131,7 @@ def simhash64_pairs(
     # aggregate plan (~16-23 s at 2M docs vs the retired in-path UDF's
     # 686 s), still the dominant stage ahead of the banded kernel
     return _simhash_banded_pairs(
-        _persist(simhash64(df, text_col, id_col)),
+        persist(simhash64(df, text_col, id_col)),
         max_hamming,
         ("sim_hi", "sim_lo"),
         per_half,

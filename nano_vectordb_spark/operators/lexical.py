@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nano_vectordb_spark.functions.text import tokens_expr
+from nano_vectordb_spark.session import persist
 
 K1 = 1.2
 B = 0.75
@@ -68,11 +69,10 @@ def bm25_term_scores(
     # persisted: tf feeds both the idf aggregate and the scoring join —
     # without it Spark re-scans the corpus for each use. tf holds only
     # query-term postings, a small fraction of the corpus at any scale.
-    tf = (
+    tf = persist(
         toks.select("doc_id", "dl", F.explode("qtoks").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("double").alias("tf"), F.first("dl").alias("dl"))
-        .persist()
     )
 
     # stats (1 row) attaches to the tiny idf relation, not the posting

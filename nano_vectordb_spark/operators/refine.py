@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nano_vectordb_spark.operators.topk import _ordering, score_expr
+from nano_vectordb_spark.session import persist
 
 
 def refine(
@@ -47,7 +48,7 @@ def refine(
     """
     cand_df = candidates.select("query_id", "vec_id").distinct()
     if staged:
-        cand_df = cand_df.persist()
+        cand_df = persist(cand_df)
         cand_df.count()  # materialize stage A
     cand = F.broadcast(cand_df)
     fetched = cand.join(

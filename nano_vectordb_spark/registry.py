@@ -35,42 +35,11 @@ from nano_vectordb_spark.registry_parts.p17_r9_wave import *  # noqa: F401,F403
 from nano_vectordb_spark.registry_parts.p18_r10_wave import *  # noqa: F401,F403
 
 # underscore names tests/tools rely on (star-import skips them)
-from nano_vectordb_spark.registry_parts.p00_base import _FIXTURE_MEMO  # noqa: F401,E402
-from nano_vectordb_spark.registry_parts.p03_ivf import _INDEX_CACHE  # noqa: F401,E402
 from nano_vectordb_spark.registry_parts.p05_text import _csv_docs_path  # noqa: F401,E402
 
-
-def release_caches() -> int:
-    """Drain every cache the registry holds: tracked dedup persists,
-    persisted fixture memos (the quantized-base artifacts), persisted
-    index DataFrames inside _INDEX_CACHE values (plain DataFrames,
-    tuples of them, or dataclasses like IvfIndex holding them), and the
-    memo dicts themselves. Long-lived sessions (bench loops, notebooks)
-    call this to return executor storage; every entry transparently
-    re-materializes on next use. Returns how many cached objects were
-    unpersisted."""
-    from nano_vectordb_spark.operators import dedup as _dedup
-    from nano_vectordb_spark.sources import tables as _tables
-
-    n = _dedup.release_caches()
-    for store in (_FIXTURE_MEMO, _INDEX_CACHE):
-        for v in list(store.values()):
-            candidates = list(v) if isinstance(v, tuple) else [v]
-            for c in list(candidates):
-                candidates.extend(getattr(c, "__dict__", {}).values())
-            for c in candidates:
-                if hasattr(c, "unpersist") and hasattr(c, "storageLevel"):
-                    try:
-                        if c.storageLevel.useMemory or c.storageLevel.useDisk:
-                            c.unpersist()
-                            n += 1
-                    except Exception:  # pragma: no cover - stopped session
-                        pass
-        store.clear()
-    _tables._TABLE_CACHE.clear()
-    _tables._RAW_SCHEMA_CACHE.clear()
-    _tables._VIEWS_STATE.clear()
-    return n
+# every cache the registry holds lives in the session store; bench and
+# notebooks drain it through this name
+from nano_vectordb_spark.session import release_caches  # noqa: F401,E402
 
 # ==========================================================================
 # Driver-gate basket ordering (round 3)

@@ -44,6 +44,7 @@ from nano_vectordb_spark.operators import rerank as rerank_ops
 from nano_vectordb_spark.operators import sample as sample_ops
 from nano_vectordb_spark.operators import textops as text_ops
 from nano_vectordb_spark.operators import topk as topk_ops
+from nano_vectordb_spark.session import memo, persist
 from nano_vectordb_spark.sources.tables import load_table
 
 K = 10
@@ -172,39 +173,24 @@ def _sql_view_query(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
 # Driver-side scalars derived from the immutable fixture (query vectors,
 # embedding dim). Each recomputation is an identical Spark job, and at
 # bench scale those jobs are 30-50% of a query's measured wall time —
-# memoize per (sf_dir, tag), like _INDEX_CACHE memoizes fitted indexes.
+# memoized per session, like the fitted indexes.
 # --------------------------------------------------------------------------
-_FIXTURE_MEMO: dict[tuple, object] = {}
 
 
-def _fixture_value(key: tuple, fn):
-    if key not in _FIXTURE_MEMO:
-        _FIXTURE_MEMO[key] = fn()
-    return _FIXTURE_MEMO[key]
-
-
+@memo
 def _qvec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
     """The fixture query vector (embeddings.vec_id == N), fetched once."""
-    from nano_vectordb_spark.sources.tables import load_table as _lt
-
-    return _fixture_value(
-        (sf_dir, "qvec", vec_id),
-        lambda: _lt(spark, sf_dir, "embeddings")
+    return (
+        load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == vec_id)
         .select("embedding")
-        .first()[0],
+        .first()[0]
     )
 
 
+@memo
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
     """The fixture embedding dimensionality, fetched once."""
-    from nano_vectordb_spark.sources.tables import load_table as _lt
-
-    return _fixture_value(
-        (sf_dir, "emb_dim"),
-        lambda: int(
-            _lt(spark, sf_dir, "embeddings")
-            .agg(F.max(F.size("embedding")))
-            .first()[0]
-        ),
+    return int(
+        load_table(spark, sf_dir, "embeddings").agg(F.max(F.size("embedding"))).first()[0]
     )

@@ -4,7 +4,6 @@ Sequential part of the registry — see registry.py (facade).
 """
 from __future__ import annotations
 from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
-    _FIXTURE_MEMO,
     DataFrame,
     F,
     K,
@@ -15,6 +14,8 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     _ser_int_col,
     gt_ops,
     load_table,
+    memo,
+    persist,
     qz,
     refine_ops,
     register,
@@ -60,6 +61,7 @@ SELECT query_id, vec_id, score, rank FROM ranked WHERE rank <= {K}
 """
 
 
+@memo
 def _i8_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The int8-quantized base. In the reference this is a STORED
     artifact — apps/nvdb_quantize_i8.cpp writes it once and every bench
@@ -67,27 +69,22 @@ def _i8_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     be scoring the quantizer, not the scan. The memoized persist is
     that artifact's in-memory analog (cluster analog: the quantized
     parquet written by the quantize_i8 sink)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "i8_base")
-    if key not in _FIXTURE_MEMO:
-        emb = load_table(spark, sf_dir, "embeddings")
-        enc = emb.withColumn(
-            "scale", qz.i8_scale_expr("embedding").cast("float")
-        ).withColumn("embedding_i8", qz.i8_encode_expr("embedding", F.col("scale")))
-        _FIXTURE_MEMO[key] = enc.persist()
-    return _FIXTURE_MEMO[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    enc = emb.withColumn(
+        "scale", qz.i8_scale_expr("embedding").cast("float")
+    ).withColumn("embedding_i8", qz.i8_encode_expr("embedding", F.col("scale")))
+    return persist(enc)
 
 
+@memo
 def _f16_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The f16-rounded base — same stored-artifact argument as
     _i8_base (tools/nvdb_convert_f16.cpp writes it once; the f16 vecbin
     sink is sources/vecbin.py's analog)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "f16_base")
-    if key not in _FIXTURE_MEMO:
-        enc = load_table(spark, sf_dir, "embeddings").withColumn(
-            "embedding_f16", qz.f16_round_expr("embedding")
-        )
-        _FIXTURE_MEMO[key] = enc.persist()
-    return _FIXTURE_MEMO[key]
+    enc = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding_f16", qz.f16_round_expr("embedding")
+    )
+    return persist(enc)
 
 
 def _topk_i8_df(spark: SparkSession, sf_dir: str) -> DataFrame:

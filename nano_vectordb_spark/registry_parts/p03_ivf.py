@@ -16,6 +16,8 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     _queries_df,
     ivf_ops,
     load_table,
+    memo,
+    persist,
     register,
     topk_ops,
 )
@@ -32,7 +34,6 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
 
 _IVF_NLIST = 16
 _IVF_NPROBE = 4
-_INDEX_CACHE: dict[tuple[str, str], object] = {}
 
 
 def _materialize_once(path: str, write_fn, marker: str = "_SUCCESS") -> None:
@@ -185,16 +186,14 @@ WHERE rank <= {K}
 """
 
 
+@memo
 def _ivf_index(spark: SparkSession, sf_dir: str) -> ivf_ops.IvfIndex:
-    # memoized per sf_dir: builds are seeded/deterministic, and the
-    # driver calls many registry entries in one session
-    key = ("ivf", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        base = load_table(spark, sf_dir, "embeddings")
-        idx = ivf_ops.ivf_build(base, nlist=_IVF_NLIST, seed=SEED)
-        idx.assigned = idx.assigned.cache()
-        _INDEX_CACHE[key] = idx
-    return _INDEX_CACHE[key]
+    # memoized: builds are seeded/deterministic, and one session runs
+    # many registry entries
+    base = load_table(spark, sf_dir, "embeddings")
+    idx = ivf_ops.ivf_build(base, nlist=_IVF_NLIST, seed=SEED)
+    idx.assigned = persist(idx.assigned)
+    return idx
 
 
 @register("ivf_search", oracle=_ivf_oracle)
@@ -329,18 +328,21 @@ def ivf_search_after_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment over ALL vectors against the pre-insert centroid
     literals, which equals build-then-add exactly because assignment
     depends only on the frozen centroids."""
-    key = ("ivf_add", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") % _IVF_ADD_MOD != 0)
-        batch = emb.filter(F.col("vec_id") % _IVF_ADD_MOD == 0)
-        idx = ivf_ops.ivf_build(corpus, nlist=_IVF_NLIST, seed=SEED)
-        idx = ivf_ops.ivf_add(idx, batch)
-        idx.assigned = idx.assigned.cache()
-        _INDEX_CACHE[key] = idx
     return ivf_ops.ivf_search(
-        _INDEX_CACHE[key], _queries_df(spark, sf_dir), K, nprobe=_IVF_NPROBE
+        _ivf_added_index(spark, sf_dir), _queries_df(spark, sf_dir), K,
+        nprobe=_IVF_NPROBE,
     )
+
+
+@memo
+def _ivf_added_index(spark: SparkSession, sf_dir: str) -> ivf_ops.IvfIndex:
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") % _IVF_ADD_MOD != 0)
+    batch = emb.filter(F.col("vec_id") % _IVF_ADD_MOD == 0)
+    idx = ivf_ops.ivf_build(corpus, nlist=_IVF_NLIST, seed=SEED)
+    idx = ivf_ops.ivf_add(idx, batch)
+    idx.assigned = persist(idx.assigned)
+    return idx
 
 
 @register("ivf_search_persisted", oracle=_ivf_oracle)
@@ -349,28 +351,28 @@ def ivf_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path: the scan carries PartitionFilters on cluster_id and
     reads only the probed directories (asserted in tests/test_plans.py).
     """
-    import hashlib
-    import os as _os
-
-    key = ("ivf_disk", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        idx = _ivf_index(spark, sf_dir)
-        # content-addressed path: a layout written by an older fit (e.g.
-        # a previous process's /tmp leftovers) must never be reused
-        cent_rows = idx.centroids.orderBy("cluster_id").collect()
-        fp = hashlib.md5(repr([tuple(r) for r in cent_rows]).encode()).hexdigest()[:12]
-        path = "/tmp/nvdb_ivf_" + hashlib.md5(
-            f"{sf_dir}:{fp}".encode()
-        ).hexdigest()[:8]
-        _materialize_once(
-            path,
-            lambda p: ivf_ops.ivf_write(idx, p),
-            marker="centroids/_SUCCESS",
-        )
-        _INDEX_CACHE[key] = ivf_ops.ivf_read(spark, path, nlist=_IVF_NLIST)
     return ivf_ops.ivf_search(
-        _INDEX_CACHE[key], _queries_df(spark, sf_dir), K, nprobe=_IVF_NPROBE
+        _ivf_disk_index(spark, sf_dir), _queries_df(spark, sf_dir), K,
+        nprobe=_IVF_NPROBE,
     )
+
+
+@memo
+def _ivf_disk_index(spark: SparkSession, sf_dir: str) -> ivf_ops.IvfIndex:
+    import hashlib
+
+    idx = _ivf_index(spark, sf_dir)
+    # content-addressed path: a layout written by an older fit (e.g.
+    # a previous process's /tmp leftovers) must never be reused
+    cent_rows = idx.centroids.orderBy("cluster_id").collect()
+    fp = hashlib.md5(repr([tuple(r) for r in cent_rows]).encode()).hexdigest()[:12]
+    path = "/tmp/nvdb_ivf_" + hashlib.md5(f"{sf_dir}:{fp}".encode()).hexdigest()[:8]
+    _materialize_once(
+        path,
+        lambda p: ivf_ops.ivf_write(idx, p),
+        marker="centroids/_SUCCESS",
+    )
+    return ivf_ops.ivf_read(spark, path, nlist=_IVF_NLIST)
 
 
 _IVF_SWEEP_NPROBES = (1, 2, 4, 8, _IVF_NLIST)

@@ -12,11 +12,12 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     _SQL_QUERIES,
     _queries_df,
     load_table,
+    memo,
+    persist,
     pq_ops,
     register,
 )
 from nano_vectordb_spark.registry_parts.p03_ivf import (  # noqa: F401
-    _INDEX_CACHE,
     _IVF_NLIST,
     _IVF_NPROBE,
     _ORACLE_FIT_CACHE,
@@ -40,14 +41,12 @@ _IVFPQ_NBITS = 4
 _PQ_REFINE_K = 50
 
 
+@memo
 def _pq_index(spark: SparkSession, sf_dir: str) -> pq_ops.PqIndex:
-    key = ("pq", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        base = load_table(spark, sf_dir, "embeddings")
-        idx = pq_ops.pq_build(base, m=_PQ_M, nbits=_PQ_NBITS, seed=SEED)
-        idx.codes = idx.codes.cache()
-        _INDEX_CACHE[key] = idx
-    return _INDEX_CACHE[key]
+    base = load_table(spark, sf_dir, "embeddings")
+    idx = pq_ops.pq_build(base, m=_PQ_M, nbits=_PQ_NBITS, seed=SEED)
+    idx.codes = persist(idx.codes)
+    return idx
 
 
 def _oracle_train_mat() -> "object":
@@ -410,18 +409,20 @@ def opq_refine_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rotated at LUT build; refine reranks in the original space.
     Orthonormality preserves dot/L2 ranking semantics. Oracle embeds the
     rotation + codebook literals and replays the whole pipeline."""
-    key = ("opq", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        base = load_table(spark, sf_dir, "embeddings")
-        rot = pq_ops.pca_rotation(base)
-        idx = pq_ops.pq_build(base, m=_PQ_M, nbits=_PQ_NBITS, seed=SEED, rotation=rot)
-        idx.codes = idx.codes.cache()
-        _INDEX_CACHE[key] = idx
     base = load_table(spark, sf_dir, "embeddings")
     return pq_ops.pq_search_refined(
-        _INDEX_CACHE[key], base, _queries_df(spark, sf_dir), K,
+        _opq_index(spark, sf_dir), base, _queries_df(spark, sf_dir), K,
         refine_k=_PQ_REFINE_K,
     )
+
+
+@memo
+def _opq_index(spark: SparkSession, sf_dir: str) -> pq_ops.PqIndex:
+    base = load_table(spark, sf_dir, "embeddings")
+    rot = pq_ops.pca_rotation(base)
+    idx = pq_ops.pq_build(base, m=_PQ_M, nbits=_PQ_NBITS, seed=SEED, rotation=rot)
+    idx.codes = persist(idx.codes)
+    return idx
 
 
 @register(
@@ -436,25 +437,23 @@ def opq_learned_refine_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrated in tests/test_pq.py on scrambled product-structured
     data (the reference's measured 0.69 -> 0.77 recall delta,
     Performance.md Table 19)."""
-    from nano_vectordb_spark.functions import kmeans as km
-
-    key = ("opq_learned", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        base = load_table(spark, sf_dir, "embeddings")
-        mat = km.collect_train_sample(
-            base, "embedding", km.train_rows_for(2**_PQ_NBITS)
-        )
-        rot = pq_ops.opq_learn_rotation(
-            mat, m=_PQ_M, nbits=_PQ_NBITS, n_iter=8, seed=SEED
-        )
-        idx = pq_ops.pq_build(base, m=_PQ_M, nbits=_PQ_NBITS, seed=SEED, rotation=rot)
-        idx.codes = idx.codes.cache()
-        _INDEX_CACHE[key] = idx
     base = load_table(spark, sf_dir, "embeddings")
     return pq_ops.pq_search_refined(
-        _INDEX_CACHE[key], base, _queries_df(spark, sf_dir), K,
+        _opq_learned_index(spark, sf_dir), base, _queries_df(spark, sf_dir), K,
         refine_k=_PQ_REFINE_K,
     )
+
+
+@memo
+def _opq_learned_index(spark: SparkSession, sf_dir: str) -> pq_ops.PqIndex:
+    from nano_vectordb_spark.functions import kmeans as km
+
+    base = load_table(spark, sf_dir, "embeddings")
+    mat = km.collect_train_sample(base, "embedding", km.train_rows_for(2**_PQ_NBITS))
+    rot = pq_ops.opq_learn_rotation(mat, m=_PQ_M, nbits=_PQ_NBITS, n_iter=8, seed=SEED)
+    idx = pq_ops.pq_build(base, m=_PQ_M, nbits=_PQ_NBITS, seed=SEED, rotation=rot)
+    idx.codes = persist(idx.codes)
+    return idx
 
 
 @register("ivfpq_refine_search", oracle=_ivfpq_refine_oracle)
@@ -466,18 +465,22 @@ def ivfpq_refine_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder in tests/test_ivfpq.py."""
     from nano_vectordb_spark.operators import ivfpq as ivfpq_ops
 
-    key = ("ivfpq", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        base = load_table(spark, sf_dir, "embeddings")
-        idx = ivfpq_ops.ivfpq_build(
-            base, nlist=_IVF_NLIST, m=_PQ_M, nbits=_IVFPQ_NBITS, seed=SEED
-        )
-        idx.codes = idx.codes.cache()
-        _INDEX_CACHE[key] = idx
     base = load_table(spark, sf_dir, "embeddings")
     return ivfpq_ops.ivfpq_search_refined(
-        _INDEX_CACHE[key], base, _queries_df(spark, sf_dir), K,
+        _ivfpq_index(spark, sf_dir), base, _queries_df(spark, sf_dir), K,
         nprobe=_IVF_NPROBE, refine_k=_PQ_REFINE_K,
     )
+
+
+@memo
+def _ivfpq_index(spark: SparkSession, sf_dir: str):
+    from nano_vectordb_spark.operators import ivfpq as ivfpq_ops
+
+    base = load_table(spark, sf_dir, "embeddings")
+    idx = ivfpq_ops.ivfpq_build(
+        base, nlist=_IVF_NLIST, m=_PQ_M, nbits=_IVFPQ_NBITS, seed=SEED
+    )
+    idx.codes = persist(idx.codes)
+    return idx
 
 

@@ -13,12 +13,13 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     _sql_ser_f32,
     ivf_ops,
     load_table,
+    memo,
+    persist,
     register,
     text_ops,
     topk_ops,
 )
 from nano_vectordb_spark.registry_parts.p03_ivf import (  # noqa: F401
-    _INDEX_CACHE,
     _IVF_NLIST,
     _IVF_NPROBE,
     _ORACLE_SF,
@@ -142,6 +143,7 @@ WHERE rank <= 5
 
 
 @register("doc_search", oracle=_SQL_DOC_SEARCH)
+@memo
 def doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic search over documents end-to-end: chunk -> deterministic
     hash embedding -> exact top-k of the first 5 chunks against the
@@ -154,11 +156,8 @@ def doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint — it feeds THREE consumers (query prefix, the
     two-phase scan, the exact rescore), so the chunk->hash-embed
     pipeline otherwise executed per consumer; the built plan is
-    memoized per (applicationId, sf_dir) because the two-phase build
-    collects its query batch eagerly at construction."""
-    key = ("doc_search", spark.sparkContext.applicationId, sf_dir)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+    memoized per session because the two-phase build collects its
+    query batch eagerly at construction."""
     docs = load_table(spark, sf_dir, "documents")
     chunks = text_ops.chunk_words(docs, _CHUNK_CHARS)
     emb = text_ops.hash_embed(chunks, dim=32).select(
@@ -170,8 +169,7 @@ def doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
     two = topk_ops.topk_multi(emb, queries, 5, strategy="two_phase")
-    _INDEX_CACHE[key] = topk_ops.exact_rescore(emb, queries, two)
-    return _INDEX_CACHE[key]
+    return topk_ops.exact_rescore(emb, queries, two)
 
 
 def _oracle_doc_centroids():
@@ -267,33 +265,31 @@ def doc_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     still ranks first (its cluster is always probed — asserted in
     tests/test_textops.py). Oracle: corpus + centroid literals replayed
     through DuckDB probe/prune/rank."""
-    key = ("doc_ivf", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        chunks = text_ops.chunk_words(docs, _CHUNK_CHARS)
-        # persist: materializes the corpus once for build+queries+search,
-        # and gives the Arrow assign UDF a plain column input (feeding it
-        # the raw hash-embed fold expression trips Spark's interpreted
-        # eval path with an INTERNAL_ERROR)
-        emb = (
-            text_ops.hash_embed(chunks, dim=32)
-            .select(
-                (F.col("doc_id") * 10000 + F.col("chunk_id")).alias("vec_id"),
-                "embedding",
-            )
-            .persist()
-        )
-        _INDEX_CACHE[key] = (
-            ivf_ops.ivf_build(emb, nlist=_IVF_NLIST, seed=SEED),
-            emb,
-        )
-    index, emb = _INDEX_CACHE[key]
+    index, emb = _doc_ivf_index(spark, sf_dir)
     queries = (
         emb.orderBy("vec_id")
         .limit(5)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
     return ivf_ops.ivf_search(index, queries, 5, nprobe=_IVF_NPROBE, metric="cosine")
+
+
+@memo
+def _doc_ivf_index(spark: SparkSession, sf_dir: str):
+    """(IVF index, embedded chunk corpus) behind doc_search_ivf."""
+    docs = load_table(spark, sf_dir, "documents")
+    chunks = text_ops.chunk_words(docs, _CHUNK_CHARS)
+    # persist: materializes the corpus once for build+queries+search,
+    # and gives the Arrow assign UDF a plain column input (feeding it
+    # the raw hash-embed fold expression trips Spark's interpreted
+    # eval path with an INTERNAL_ERROR)
+    emb = persist(
+        text_ops.hash_embed(chunks, dim=32).select(
+            (F.col("doc_id") * 10000 + F.col("chunk_id")).alias("vec_id"),
+            "embedding",
+        )
+    )
+    return ivf_ops.ivf_build(emb, nlist=_IVF_NLIST, seed=SEED), emb
 
 
 _MM_DIM = 16

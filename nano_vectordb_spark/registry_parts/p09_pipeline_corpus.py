@@ -16,6 +16,7 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     ivf_ops,
     lexical_ops,
     load_table,
+    memo,
     pipe_ops,
     register,
     text_ops,
@@ -23,7 +24,6 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     tx,
 )
 from nano_vectordb_spark.registry_parts.p03_ivf import (  # noqa: F401
-    _INDEX_CACHE,
     _IVF_NPROBE,
     _ivf_index,
     _ivf_oracle,
@@ -561,6 +561,7 @@ WHERE rank <= {_RRF_K}
 
 
 @register("hybrid_search_rrf", oracle=_rrf_oracle)
+@memo
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 lexical ranking fused with semantic
     embedding ranking by reciprocal-rank fusion (Cormack et al. 2009:
@@ -576,11 +577,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: the embedded corpus frame is pinned with a lazy
     localCheckpoint (it feeds the two-phase base, the rescore base and
     the query split — the hash-embed fold otherwise re-executed per
-    consumer) and the built plan is memoized per (applicationId,
-    sf_dir) — the two-phase build collects its query batch eagerly."""
-    key = ("hybrid_search_rrf", spark.sparkContext.applicationId, sf_dir)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+    consumer) and the built plan is memoized per session — the
+    two-phase build collects its query batch eagerly."""
     docs = load_table(spark, sf_dir, "documents")
     lex = lexical_ops.bm25_search(spark, docs, _BM25_QUERIES, k=_RRF_POOL).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
@@ -624,10 +622,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("rrf_score").desc(), F.col("doc_id").asc()
     )
-    _INDEX_CACHE[key] = fused.withColumn(
+    return fused.withColumn(
         "rank", F.row_number().over(w).cast("int")
     ).filter(F.col("rank") <= _RRF_K)
-    return _INDEX_CACHE[key]
 
 
 _QF_Q = 0.25

@@ -17,6 +17,8 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     ivf_ops,
     lexical_ops,
     load_table,
+    memo,
+    persist,
     pipe_ops,
     register,
     text_ops,
@@ -28,7 +30,6 @@ from nano_vectordb_spark.registry_parts.p02_quantize_refine import (  # noqa: F4
     _i8_base,
 )
 from nano_vectordb_spark.registry_parts.p03_ivf import (  # noqa: F401
-    _INDEX_CACHE,
     _IVF_NLIST,
     _IVF_SWEEP_NPROBES,
     _ORACLE_SF,
@@ -214,7 +215,7 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct posting table feeds three plan branches (per-source
     # totals + both sides of the hash self-join): persist it once so
     # the shingle explode+distinct shuffle runs once, not three times
-    post = (
+    post = persist(
         sh.select("source", F.explode("shingles").alias("sh"))
         .select(
             "source",
@@ -223,7 +224,6 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("hh"),
         )
         .distinct()
-        .persist()
     )
     totals = post.groupBy("source").agg(F.count("*").alias("n"))
     a = post.select(F.col("source").alias("src_a"), "hh")
@@ -468,18 +468,14 @@ FROM pair
 
 
 @register("minhash_estimator_error", oracle=_sql_minhash_estimator_error())
+@memo
 def minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator audit over the LSH candidate pairs: signature
     estimate (equal-slot fraction, k=16) vs exact shingle Jaccard —
     mean/max absolute error and bias. The dedup-family analog of
     quant_error_stats: the evidence that the chosen k is accurate
     enough before the near-dup pass scales to the full corpus."""
-    key = ("minhash_est_err", spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = dedup_ops.minhash_estimator_error(
-            load_table(spark, sf_dir, "documents")
-        )
-    return _INDEX_CACHE[key]
+    return dedup_ops.minhash_estimator_error(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -849,6 +845,7 @@ FROM l JOIN s USING (query_id) LEFT JOIN c ON c.query_id = l.query_id
 
 
 @register("rankers_agreement", oracle=_sql_rankers_agreement)
+@memo
 def rankers_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical-vs-semantic ranker agreement: per query, the Jaccard
     overlap of the two top-{_RRF_POOL} pools — the complementarity
@@ -861,12 +858,9 @@ def rankers_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: both pool frames are pinned with lazy localCheckpoints — each
     feeds TWO consumers (its size aggregate and the overlap join), so
     the full BM25 / hash-embed + two-phase pipelines otherwise executed
-    twice per action; the built plan is memoized per (applicationId,
-    sf_dir) because the two-phase build collects its query batch
-    eagerly at construction."""
-    key = ("rankers_agreement", spark.sparkContext.applicationId, sf_dir)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+    twice per action; the built plan is memoized per session because
+    the two-phase build collects its query batch eagerly at
+    construction."""
     docs = load_table(spark, sf_dir, "documents")
     lex = lexical_ops.bm25_search(
         spark, docs, _BM25_QUERIES, k=_RRF_POOL
@@ -903,7 +897,7 @@ def rankers_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id")
         .agg(F.count("*").alias("n_common"))
     )
-    _INDEX_CACHE[key] = (
+    return (
         l.join(s, "query_id")
         .join(c, "query_id", "left")
         .select(
@@ -921,7 +915,6 @@ def rankers_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    return _INDEX_CACHE[key]
 
 
 @register(

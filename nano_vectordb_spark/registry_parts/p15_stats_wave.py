@@ -16,11 +16,11 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
     grank,
     lexical_ops,
     load_table,
+    memo,
     register,
     resolve_oracle,
     tx,
 )
-from nano_vectordb_spark.registry_parts.p03_ivf import _INDEX_CACHE  # noqa: F401
 from nano_vectordb_spark.registry_parts.p05_text import _SQL_QUALITY, _toks_df  # noqa: F401
 from nano_vectordb_spark.registry_parts.p06_dedup import _SQL_SHINGLES  # noqa: F401
 from nano_vectordb_spark.registry_parts.p09_pipeline_corpus import _BM25_QUERIES  # noqa: F401
@@ -196,6 +196,7 @@ WINDOW w AS (ORDER BY nprobe)
 
 
 @register("ann_cost_frontier", oracle=_frontier_oracle)
+@memo
 def ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN operating-point decision table, composed: recall@k
     (ivf_recall_sweep) joined to scan cost (ivf_probe_cost) per
@@ -212,10 +213,7 @@ def ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweeps to produce) are pinned with lazy localCheckpoints so
     repeated materialization of this entry re-reads them instead of
     re-running both sweeps, and the built plan is memoized per
-    (applicationId, sf_dir) so re-invocation reuses those pins."""
-    key = ("ann_cost_frontier", spark.sparkContext.applicationId, sf_dir)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+    session so re-invocation reuses those pins."""
     sweep = REGISTRY["ivf_recall_sweep"].fn(spark, sf_dir).localCheckpoint(eager=False)
     cost = REGISTRY["ivf_probe_cost"].fn(spark, sf_dir).localCheckpoint(eager=False)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -224,7 +222,7 @@ def ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         cost.select("nprobe", "scan_fraction", "total_rows_scanned"), "nprobe"
     )
     w = Window.orderBy("nprobe")
-    _INDEX_CACHE[key] = j.select(
+    return j.select(
         "nprobe",
         "recall_at_k",
         "scan_fraction",
@@ -240,7 +238,6 @@ def ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("marginal_recall_per_scan"),
     )
-    return _INDEX_CACHE[key]
 
 
 _SQL_GINI = """

@@ -17,7 +17,6 @@ from nano_vectordb_spark.registry_parts.p00_base import (  # noqa: F401
 )
 from nano_vectordb_spark.functions.vector import dot_expr
 from nano_vectordb_spark.registry_parts.p03_ivf import (  # noqa: F401
-    _INDEX_CACHE,
     _ivf_index,
     _oracle_centroids_np,
     _sql_l2,

@@ -1,15 +1,70 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with scale-aware defaults, and the
+session-scoped cache store.
 
 Local-mode settings mirror what we would set on a real cluster: AQE on
 (runtime re-plan, skew-join handling), shuffle partitions sized to the
 parallelism, Arrow enabled for the Pandas-UDF slow path.
+
+The store is the one place that decides what a cached value is keyed
+on and how it is freed — the in-memory analog of the reference's
+build-once artifacts (apps/nvdb_quantize_i8.cpp writes the int8 base
+once; every bench run mmaps it):
+  * ``memo`` caches ``fn(spark, *args)`` per (applicationId, fn, args),
+    so a stopped session's DataFrames never leak into its successor;
+  * ``persist`` persists a DataFrame that outlives its call and tracks it;
+  * ``release_caches`` unpersists every tracked frame and clears every
+    memo — long-lived sessions (bench loops, notebooks) call it to
+    return executor storage; every entry re-materializes on next use.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_MEMO: dict[tuple, object] = {}
+_TRACKED: list[DataFrame] = []
+
+
+def memo(fn):
+    """Cache ``fn(spark, *args)`` for the life of the session.
+
+    Not locked: a lock held across ``fn`` would deadlock a build whose
+    thread pool calls another memo. Two threads that miss the same key
+    at once both build it; every persist either takes is tracked, and
+    the last result is kept."""
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, *args):
+        key = (spark.sparkContext.applicationId, fn.__module__, fn.__qualname__, *args)
+        if key not in _MEMO:
+            _MEMO[key] = fn(spark, *args)
+        return _MEMO[key]
+
+    return wrapper
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and track it for :func:`release_caches`."""
+    out = df.persist()
+    _TRACKED.append(out)
+    return out
+
+
+def release_caches() -> int:
+    """Unpersist every tracked frame and clear every memo; returns how
+    many frames were released."""
+    n = len(_TRACKED)
+    for df in _TRACKED:
+        try:
+            df.unpersist()
+        except Exception:  # pragma: no cover - session already stopped
+            pass
+    _TRACKED.clear()
+    _MEMO.clear()
+    return n
 
 
 def get_spark(

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nano_vectordb_spark.session import memo
+
 TABLES = (
     "region",
     "nation",
@@ -30,13 +32,10 @@ TABLES = (
 # round-trips plus a footer read, and registry entries call load_table
 # 1-10 times EACH — at bench scale that's 30-70% of a query's wall
 # time. DataFrames are immutable, so the per-(session, dir, table)
-# instance is memoized and shared. Keyed by applicationId: a stopped
-# session's DataFrames must not leak into its successor.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_RAW_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-_CONFS_SET: set[str] = set()
+# instance is memoized and shared (session.memo).
 
 
+@memo
 def ensure_read_confs(spark: SparkSession) -> None:
     """Session confs required to read the driver's parquet layout.
 
@@ -45,36 +44,26 @@ def ensure_read_confs(spark: SparkSession) -> None:
     hand us an already-built session (e.g. an external harness) — a runtime
     conf.set works on a live session and is a no-op when already set.
     """
-    app_id = spark.sparkContext.applicationId
-    if app_id in _CONFS_SET:
-        return
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _CONFS_SET.add(app_id)
 
 
+@memo
 def raw_parquet_schema(spark: SparkSession, path: str):
     """The UNNORMALIZED schema of a parquet table, memoized per
-    (applicationId, path). Stream sources must declare the on-disk
+    session. Stream sources must declare the on-disk
     schema (the file source reads raw files; any ts normalization
     happens downstream), so they cannot reuse load_table's normalized
     plan — but the footer read + py4j round-trips are the same
     per-call tax, so the schema gets the same memo treatment."""
     ensure_read_confs(spark)
-    key = (spark.sparkContext.applicationId, path)
-    cached = _RAW_SCHEMA_CACHE.get(key)
-    if cached is None:
-        cached = _RAW_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return cached
+    return spark.read.parquet(path).schema
 
 
+@memo
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_read_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts normalizes to TIMESTAMP_NTZ — wall-clock micros with no
     # session-timezone dependence, matching DuckDB's naive TIMESTAMP on
@@ -95,7 +84,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
             ),
         )
-    _TABLE_CACHE[key] = df
     return df
 
 

@@ -644,8 +644,11 @@ def test_embedding_neardup_pairs_matches_literal_cartesian(spark):
 def test_minhash_verify_hash_prefilter_is_output_identical(spark, monkeypatch):
     """r13: above VERIFY_HASH_PREFILTER_MIN_CANDIDATES the verify runs
     a 64-bit-hash prefilter stage before the exact string verify. The
-    prefilter is provably a superset filter (hash-set intersect >=
-    string-set intersect), so pairs AND jaccard values must be
+    prefilter is a superset filter (hash-set intersect >= string-set
+    intersect) whenever xxhash64 is injective on each document's
+    shingle set — a collision between two shared shingles could prune
+    a pair, at a per-pair risk of about n_sh^2 * 2^-64, which no
+    fixture reaches — so pairs AND jaccard values must be
     byte-identical with the gate forced on vs forced off."""
     docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
 

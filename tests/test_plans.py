@@ -437,9 +437,7 @@ def test_minhash_join_candidates_skinny_exchange_and_distinct(spark):
     from nano_vectordb_spark.operators import dedup as dedup_ops
 
     docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-    base = dedup_ops._persist(
-        dedup_ops._shingles_and_sig(docs, 16, 3, "text", "doc_id")
-    )
+    base = dedup_ops._shingles_and_sig(docs, 16, 3, "text", "doc_id").persist()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -8,7 +8,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from nano_vectordb_spark import registry
+from nano_vectordb_spark import registry, session
 from tests.conftest import SF_SMOKE
 
 
@@ -107,9 +107,24 @@ def test_release_caches_drains_and_recovers(spark):
     registry.REGISTRY["minhash_lsh_pairs"].fn(spark, SF_SMOKE).count()
     released = registry.release_caches()
     assert released > 0
-    assert not registry._FIXTURE_MEMO and not registry._INDEX_CACHE
+    assert not session._MEMO and not session._TRACKED
     # everything rebuilds on demand
     assert registry.REGISTRY["topk_i8"].fn(spark, SF_SMOKE).count() > 0
+
+
+def test_release_caches_leaves_nothing_cached(spark):
+    """Every frame an entry persists is tracked by the session store, so
+    release_caches() leaves the session's CacheManager empty — not only
+    the frames a walk over memo values happens to reach."""
+    spark.catalog.clearCache()
+    for name in ("topk_i8", "ivf_search", "minhash_lsh_pairs", "source_overlap"):
+        assert _run(spark, name).count() > 0
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache_manager.isEmpty()
+    registry.release_caches()
+    assert cache_manager.isEmpty()
+    assert not session._MEMO and not session._TRACKED
+    assert _run(spark, "source_overlap").count() > 0
 
 
 def test_session_restart_does_not_serve_stale_caches():

@@ -11,6 +11,7 @@ mapping could in principle diverge.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from nano_vectordb_spark.functions import text as tx
@@ -75,6 +76,46 @@ def test_scored_docs_matches_expression_path_adversarial(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     _assert_paths_identical(df)
+
+
+def test_scored_docs_matches_expression_path_batch_ending_empty(spark):
+    """One Arrow batch whose last row is "" — the shape where clipping
+    the empty row's reduceat start moved the previous row's last byte
+    out of its segment (n_tokens of "c d e" came out 2)."""
+    rows = [(1, "a b"), (2, "c d e"), (3, "")]
+    df = spark.createDataFrame(rows, "doc_id int, text string").coalesce(1)
+    _assert_paths_identical(df)
+
+
+def _row_profile(text):
+    """Pure-Python reference for one row of _profile_arrow's counts."""
+    if text is None:
+        return (0,) * 8
+    toks = [t for t in text.split(" ") if t]
+    hits = [sum(t in words for t in toks) for _, words in tx._PROFILE_CATEGORIES]
+    low = text.lower()
+    n_punct = sum(ch not in "abcdefghijklmnopqrstuvwxyz0123456789 " for ch in low)
+    return (len(toks), *hits, len(low), n_punct)
+
+
+def _assert_profile_rows(texts):
+    arr = pa.array(texts, pa.string())
+    for batch, rows in ((arr, texts), (arr.slice(1), texts[1:])):
+        got = tx._profile_arrow(batch)
+        cols = [got.field(c).to_pylist() for c in tx._PROFILE_COLS]
+        for i, text in enumerate(rows):
+            assert tuple(c[i] for c in cols) == _row_profile(text), (rows, i)
+
+
+def test_profile_arrow_empty_and_null_rows_at_every_batch_position():
+    """An empty row, then a null row, swept through every position of a
+    short batch (and of its offset slice), against the row reference."""
+    base = ["a b", "of über", "the cat, sat.", "c  d e ", "x y"]
+    for filler in ("", None):
+        for pos in range(len(base) + 1):
+            _assert_profile_rows(base[:pos] + [filler] + base[pos:])
+        _assert_profile_rows(base + [filler, filler])
+        _assert_profile_rows([filler, filler] + base)
 
 
 def test_scored_docs_single_profile_pass(spark):
